@@ -1381,7 +1381,6 @@ ORDER BY query_id
     doc="S9: IVF index persisted partitionBy(cell) + centroid table, reloaded in a fresh lineage — search identical",
 )
 def s9_knn_index_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     np = _np()
@@ -1391,8 +1390,9 @@ def s9_knn_index_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted: consumed by the partitioned write AND the build-side
     # fingerprint — one Arrow assignment pass, not two
     indexed = track(assign_cells(corpus, cent).persist())
-    tmp = tempfile.mkdtemp(prefix="iotx_s9_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="iotx_s9_", ignore_cleanup_errors=True
+    ) as tmp:
         assign_path = os.path.join(tmp, "assignments")
         cent_path = os.path.join(tmp, "centroids")
         # cluster by cell BEFORE the partitioned write: without it every
@@ -1464,8 +1464,6 @@ def s9_knn_index_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
         # deleted — the plan reads the reloaded parquet lazily
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

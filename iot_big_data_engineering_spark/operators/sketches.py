@@ -226,14 +226,14 @@ def a17b_rollup_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical state rows — so the merged state still equals the full
     recompute the oracle performs. This hash-checks the idempotent-
     overwrite contract itself, not just the merge algebra a17 covers."""
-    import shutil
     import tempfile
 
     from ..caching import track
 
-    tmp = tempfile.mkdtemp(prefix="iotx_a17b_")
     # scratch state released on every exit (matching st8/st10)
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="iotx_a17b_", ignore_cleanup_errors=True
+    ) as tmp:
         state_path = os.path.join(tmp, "state")
         q = track(
             quality_checked(spark, sf_dir)
@@ -275,11 +275,9 @@ def a17b_rollup_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         # |sensor_type| rows — bounded; materialize so the scratch state dir
-        # can be deleted instead of leaking one mkdtemp per run
+        # can be deleted instead of leaking one per run
         rows = result.collect()
         return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -541,14 +539,14 @@ def a17c_rollup_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes everything from raw rows in one pass, so the result
     only hashes green if compaction is value-transparent AND the
     post-compaction delivery merges cleanly with the compacted partition."""
-    import shutil
     import tempfile
 
     from ..caching import track
 
-    tmp = tempfile.mkdtemp(prefix="iotx_a17c_")
     # scratch state released on every exit (matching st8/st10)
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="iotx_a17c_", ignore_cleanup_errors=True
+    ) as tmp:
         state_path = os.path.join(tmp, "state")
         q = track(
             quality_checked(spark, sf_dir)
@@ -587,11 +585,9 @@ def a17c_rollup_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         # |sensor_type| rows — bounded; materialize so the scratch state dir
-        # can be deleted instead of leaking one mkdtemp per run
+        # can be deleted instead of leaking one per run
         rows = result.collect()
         return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

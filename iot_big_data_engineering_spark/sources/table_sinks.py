@@ -37,17 +37,29 @@ def overwrite_dated_table(
 ) -> None:
     """S7: idempotent daily overwrite — partition the managed table by the
     date column and dynamically overwrite only the dates present in ``df``
-    (the reference rewrote hand-built ``.../date=<d>`` paths)."""
+    (the reference rewrote hand-built ``.../date=<d>`` paths).
+
+    The session's ``partitionOverwriteMode`` is switched to dynamic for
+    this write only and restored afterwards: ``insertInto`` ignores a
+    per-write option and would statically drop every other date."""
     spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    if not spark.catalog.tableExists(table):
-        df.write.partitionBy(date_col).saveAsTable(table)
-    else:
-        # insertInto is positional; align to the table's column order
-        # (partition columns are stored last in a partitioned table)
-        df.select(*spark.table(table).columns).write.insertInto(
-            table, overwrite=True
-        )
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, "dynamic")
+    try:
+        if not spark.catalog.tableExists(table):
+            df.write.partitionBy(date_col).saveAsTable(table)
+        else:
+            # insertInto is positional; align to the table's column order
+            # (partition columns are stored last in a partitioned table)
+            df.select(*spark.table(table).columns).write.insertInto(
+                table, overwrite=True
+            )
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
 
 
 def overwrite_table(df: DataFrame, table: str) -> None:

@@ -7,9 +7,15 @@ Rebuild shape (Spark-first):
 
     readStream (file/rate/kafka) → map to sensor schema → apply_quality
       → foreachBatch(epoch):
-          quality rows   → parquet append  (sensor_quality_checked)
-          A1 window agg  → parquet append  (sensor_analytics)
-          anomaly rows   → parquet append  (sensor_anomalies)
+          quality rows   → epoch partition  (sensor_quality_checked)
+          A1 window agg  → epoch partition  (sensor_analytics)
+          anomaly rows   → epoch partition  (sensor_anomalies)
+
+Every flow runs through three private mechanisms: ``_run_available_now``
+(one bounded ``availableNow`` query, its data micro-batches counted),
+``_epoch_overwrite`` (the epoch-keyed sink — its docstring states the
+replay and empty-epoch contract) and ``_write_key_slices`` (a bounded
+input split into single-file micro-batches).
 
 Two window semantics, both provided (SURVEY §7.4.3):
 - ``run_microbatch_pipeline`` reproduces the reference's per-batch windows
@@ -32,8 +38,11 @@ into an idempotent sink; checkpointLocation carries source offsets.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import time
+import uuid
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -85,6 +94,89 @@ def sensor_stream(spark: SparkSession, path: str, **kw) -> DataFrame:
     return apply_quality(map_events(events_file_stream(spark, path, **kw)))
 
 
+def _run_available_now(
+    df: DataFrame,
+    foreach_batch: Callable[[DataFrame, int], None] | None = None,
+    *,
+    name: str | None = None,
+    output_mode: str = "append",
+    checkpoint: str | None = None,
+) -> tuple[DataFrame | None, int]:
+    """Run the streaming frame ``df`` as one ``availableNow`` query and
+    wait for it to finish.
+
+    The sink is ``foreach_batch`` when given; otherwise it is an
+    in-memory table, returned as the first element (its query name is
+    ``name``, or a generated one). The second element counts the data
+    micro-batches: progress entries with ``numInputRows > 0``, so the
+    no-data batches a watermark advance triggers are not counted. The
+    count reads ``recentProgress``, which keeps only the last
+    ``spark.sql.streaming.numRecentProgressUpdates`` (default 100)
+    entries; past that many triggers it under-counts."""
+    name = name or f"iotx_{uuid.uuid4().hex[:8]}"
+    writer = df.writeStream.queryName(name).outputMode(output_mode)
+    if foreach_batch is None:
+        writer = writer.format("memory")
+    else:
+        writer = writer.foreachBatch(foreach_batch)
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    n = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+    return (None if foreach_batch else df.sparkSession.table(name)), n
+
+
+def _epoch_overwrite(df: DataFrame, epoch_id: int, path: str) -> None:
+    """Write ``df`` as micro-batch ``epoch_id``'s partition of the
+    parquet table at ``path`` (``path/epoch_id=<id>``), replacing
+    whatever that partition held. Every foreachBatch sink here writes
+    through this function.
+
+    - Replay-idempotent. foreachBatch is at-least-once: a crash between
+      the sink write and the checkpoint commit replays the epoch under
+      the same id. Appending would keep the replayed rows twice;
+      dynamically overwriting exactly the epoch's own partition leaves
+      the table as one clean run would (checkpointed offsets plus this
+      sink are the exactly-once recipe SCALE.md states). Other epochs'
+      partitions are never touched.
+    - Empty epochs. A dynamic overwrite of zero rows touches no
+      partition, so a torn write of an epoch whose replay yields no rows
+      would survive it. The partition is therefore removed first, which
+      makes the epoch's content exactly ``df``, zero rows included,
+      without a job to test ``df`` for emptiness. (On an object store
+      this is the partition-prefix delete.)"""
+    shutil.rmtree(os.path.join(path, f"epoch_id={int(epoch_id)}"), ignore_errors=True)
+    (
+        df.withColumn("epoch_id", F.lit(int(epoch_id)))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("epoch_id")
+        .parquet(path)
+    )
+
+
+# Key slices, one single-file micro-batch each, of the multi-batch flows
+_ST8_N_SPLITS = 3
+
+
+def _write_key_slices(
+    df: DataFrame,
+    key: str,
+    out_dir: str,
+    slices: Iterable[int] = range(_ST8_N_SPLITS),
+) -> None:
+    """Append one single-file parquet to ``out_dir`` per key slice
+    ``pmod(xxhash64(key), _ST8_N_SPLITS) == i`` for ``i`` in ``slices``.
+    Streamed back with ``maxFilesPerTrigger=1`` each slice is one
+    micro-batch. The hash split is deterministic and fills every slice
+    of any non-degenerate corpus, where ``repartition(N)``'s round-robin
+    makes no emptiness promise on tiny inputs."""
+    slice_of = F.pmod(F.xxhash64(key), F.lit(_ST8_N_SPLITS))
+    for i in slices:
+        df.filter(slice_of == i).coalesce(1).write.mode("append").parquet(out_dir)
+
+
 def batch_windowed_analytics(df: DataFrame) -> DataFrame:
     """A1 aggregation applied to one micro-batch (reference
     SensorDataProcessor.scala:160-169 — exact countDistinct is fine here
@@ -118,8 +210,9 @@ def run_microbatch_pipeline(
     max_files_per_trigger: int | None = None,
 ) -> dict[str, str]:
     """Reference-parity pipeline: quality → per-batch windowed analytics →
-    anomalies, each appended to a parquet sink per micro-batch. Runs the
-    bounded stream to completion and returns the sink paths."""
+    anomalies, each written to its parquet sink as the micro-batch's epoch
+    partition. Runs the bounded stream to completion and returns the sink
+    paths."""
     quality_path = os.path.join(out_dir, "sensor_quality_checked")
     analytics_path = os.path.join(out_dir, "sensor_analytics")
     anomalies_path = os.path.join(out_dir, "sensor_anomalies")
@@ -129,29 +222,14 @@ def run_microbatch_pipeline(
         spark, source_path, glob=glob, max_files_per_trigger=max_files_per_trigger
     )
 
-    def _epoch_write(df: DataFrame, epoch_id: int, path: str) -> None:
-        # foreachBatch is at-least-once: a crash between sink write and
-        # checkpoint commit replays the epoch. Appending a replay would
-        # duplicate its rows forever; dynamically overwriting exactly the
-        # epoch's own partition makes every sink replay-idempotent — the
-        # exactly-once recipe (checkpointed offsets + idempotent
-        # epoch-keyed sinks) SCALE.md states, now actually implemented.
-        (
-            df.withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(path)
-        )
-
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.persist()
         try:
-            _epoch_write(batch_df, epoch_id, quality_path)
-            _epoch_write(
+            _epoch_overwrite(batch_df, epoch_id, quality_path)
+            _epoch_overwrite(
                 batch_windowed_analytics(batch_df), epoch_id, analytics_path
             )
-            _epoch_write(
+            _epoch_overwrite(
                 batch_df.filter(F.col("anomaly_score") > 0),
                 epoch_id,
                 anomalies_path,
@@ -159,13 +237,7 @@ def run_microbatch_pipeline(
         finally:
             batch_df.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_available_now(stream, process_batch, checkpoint=checkpoint)
     return {
         "quality": quality_path,
         "analytics": analytics_path,
@@ -213,16 +285,8 @@ def run_windowed_stream_to_memory(
     stream = sensor_stream(
         spark, source_path, glob=glob, max_files_per_trigger=max_files_per_trigger
     )
-    q = (
-        windowed_analytics_stream(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    out, _ = _run_available_now(windowed_analytics_stream(stream), name=name)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -244,13 +308,12 @@ from ..registry import register  # noqa: E402
 def st1_streaming_microbatch_analytics(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-
-    out_dir = tempfile.mkdtemp(prefix="iotx_stream_")
     # the analytics result is windows×types rows — bounded; materialize
     # it so the scratch sinks (a full quality-checked copy of the corpus
     # per run) are deleted instead of leaked, exactly like st8/st10
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="iotx_stream_", ignore_cleanup_errors=True
+    ) as out_dir:
         paths = run_microbatch_pipeline(spark, sf_dir, out_dir)
         # Schema-pinned re-read (the a17c compactor pattern,
         # operators/sketches.py): an all-empty corpus writes the sink
@@ -282,8 +345,6 @@ def st1_streaming_microbatch_analytics(
         result = raw.drop("epoch_id")
         rows = result.collect()
         return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -385,20 +446,8 @@ WHERE session_end <= (SELECT max(ts) - INTERVAL 10 MINUTE
     doc="§2.7 session windows: streaming gap sessions ≡ SQL sessionization",
 )
 def st2_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    name = f"st2_out_{uuid.uuid4().hex[:8]}"
-    stream = sensor_stream(spark, sf_dir)
-    q = (
-        session_window_stream(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    out, _ = _run_available_now(session_window_stream(sensor_stream(spark, sf_dir)))
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -433,9 +482,6 @@ def st3_streaming_product(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``collect_set(vehicle_id)`` through state to self-certify the HLL error
     bound; that is exact-distinct state, unbounded — the bound is now
     certified by a batch post-check in the registered query instead.)"""
-    import uuid
-
-    name = f"st3_out_{uuid.uuid4().hex[:8]}"
     stream = sensor_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "2 minutes")
@@ -452,18 +498,11 @@ def st3_streaming_product(spark: SparkSession, sf_dir: str) -> DataFrame:
             "approx_vehicles",
         )
     )
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _assert_single_data_batch(q)  # same assumption as st5/st6: append-mode
-    # window closure only matches the oracle when ALL input lands in one
-    # micro-batch (a split source drops still-open windows silently)
-    return spark.table(name)
+    out, n = _run_available_now(agg)
+    _assert_single_data_batch(n)  # append-mode window closure only
+    # matches the oracle when ALL input lands in one micro-batch (a split
+    # source drops still-open windows silently)
+    return out
 
 
 @register(
@@ -535,9 +574,6 @@ LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
     doc="§2.7 stream-static broadcast enrichment (streaming twin of j13)",
 )
 def st4_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    name = f"st4_out_{uuid.uuid4().hex[:8]}"
     stream = sensor_stream(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer")
     nat = load_table(spark, sf_dir, "nation")
@@ -552,15 +588,8 @@ def st4_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     enriched = enrich_stream(stream, dim, "vehicle_id", "vid").select(
         "ts", "vehicle_id", "sensor_type", "value", "mktsegment", "nation_name"
     )
-    q = (
-        enriched.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    out, _ = _run_available_now(enriched)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -583,22 +612,19 @@ SELECT DISTINCT vehicle_id, sensor_type FROM sensor_quality_checked
 )
 
 
-def _assert_single_data_batch(q) -> None:
-    """Pin the single-micro-batch assumption st5/st6's oracle parity rests
-    on: over the driver's one-file bounded stream, availableNow must land
-    ALL input in ONE micro-batch (st5 would re-emit keys past the
-    watermark horizon across batches; st6's update-mode sink would hold
-    one row per key per update). If the source ever splits (multiple glob
-    matches, changed batching), fail loudly here instead of hash-failing
-    at the driver with no explanation."""
-    data_batches = [
-        p for p in q.recentProgress if p["numInputRows"] > 0
-    ]
-    if len(data_batches) != 1:  # RuntimeError, not assert: -O strips asserts
+def _assert_single_data_batch(n_data_batches: int) -> None:
+    """Pin the single-micro-batch assumption st3/st5/st6/st7's oracle
+    parity rests on: over the driver's one-file bounded stream,
+    availableNow must land ALL input in ONE micro-batch (st5 would re-emit
+    keys past the watermark horizon across batches; st6's update-mode
+    sink would hold one row per key per update). If the source ever
+    splits (multiple glob matches, changed batching), fail loudly here
+    instead of hash-failing at the driver with no explanation."""
+    if n_data_batches != 1:  # RuntimeError, not assert: -O strips asserts
         raise RuntimeError(
-            f"bounded stream split into {len(data_batches)} data "
-            "micro-batches; st5/st6 oracle parity assumes exactly one "
-            "(see comment)"
+            f"bounded stream split into {n_data_batches} data "
+            "micro-batches; st3/st5/st6/st7 oracle parity assumes exactly "
+            "one (see comment)"
         )
 
 
@@ -608,23 +634,13 @@ def _assert_single_data_batch(q) -> None:
     doc="§2.7 dropDuplicatesWithinWatermark: bounded-state streaming dedup",
 )
 def st5_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    name = f"st5_out_{uuid.uuid4().hex[:8]}"
     stream = sensor_stream(spark, sf_dir)
     deduped = dedup_stream(
         stream, keys=("vehicle_id", "sensor_type"), watermark="30 minutes"
     ).select("vehicle_id", "sensor_type")
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _assert_single_data_batch(q)
-    return spark.table(name)
+    out, n = _run_available_now(deduped)
+    _assert_single_data_batch(n)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -656,23 +672,13 @@ GROUP BY vehicle_id
     doc="§2.7/§2.8 applyInPandasWithState custom stateful operator",
 )
 def st6_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from .stateful import running_vehicle_totals
 
-    name = f"st6_out_{uuid.uuid4().hex[:8]}"
-    stream = sensor_stream(spark, sf_dir)
-    q = (
-        running_vehicle_totals(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+    out, n = _run_available_now(
+        running_vehicle_totals(sensor_stream(spark, sf_dir)), output_mode="update"
     )
-    q.awaitTermination()
-    _assert_single_data_batch(q)
-    return spark.table(name).select("vehicle_id", "running_count", "last_seen")
+    _assert_single_data_batch(n)
+    return out.select("vehicle_id", "running_count", "last_seen")
 
 
 # ---------------------------------------------------------------------------
@@ -710,9 +716,6 @@ JOIN sensor_quality_checked b
     doc="§2.7 watermarked stream-stream interval join (bounded state)",
 )
 def st7_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    name = f"st7_out_{uuid.uuid4().hex[:8]}"
     err = (
         sensor_stream(spark, sf_dir)
         .filter(F.col("sensor_type") == "error")
@@ -742,16 +745,9 @@ def st7_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         & (F.col("click_ts") <= F.col("error_ts")),
     ).select("vehicle_id", "error_ts", "error_value", "click_ts", "click_value")
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _assert_single_data_batch(q)
-    return spark.table(name)
+    out, n = _run_available_now(joined)
+    _assert_single_data_batch(n)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -766,17 +762,14 @@ def st7_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # raw data per run, SensorDataAnalytics.scala:40-44).
 #
 # Unlike st1-st7 (single-file bounded streams pinned to ONE micro-batch),
-# st8 deliberately splits the input into several files — one per
-# DETERMINISTIC key slice (pmod(xxhash64(event_id), N), so every
-# slice is non-empty on any non-degenerate corpus, unlike repartition(N)
-# whose round-robin makes no emptiness promise on tiny inputs) — and
-# streams them maxFilesPerTrigger=1, then RAISES unless >= 2 data batches
-# ran (RuntimeError, not assert: `python -O` strips asserts and a
-# single-batch run would silently certify). So the driver's hash row
-# certifies the cross-batch merge path, not a degenerate single-batch
-# run. Oracle = the full recompute (A17's), so any double-count /
-# dropped-group / sketch-union regression across batch boundaries fails
-# the gate.
+# st8 deliberately splits the input into _write_key_slices' single-file
+# key slices (on event_id) and streams them maxFilesPerTrigger=1, then
+# RAISES unless >= 2 data batches ran (RuntimeError, not assert: `python
+# -O` strips asserts and a single-batch run would silently certify). So
+# the driver's hash row certifies the cross-batch merge path, not a
+# degenerate single-batch run. Oracle = the full recompute (A17's), so
+# any double-count / dropped-group / sketch-union regression across
+# batch boundaries fails the gate.
 # ---------------------------------------------------------------------------
 from ..operators.sketches import (  # noqa: E402
     A17_ORACLE,
@@ -784,9 +777,6 @@ from ..operators.sketches import (  # noqa: E402
     _partial_state,
     merge_states,
 )
-from ..sources.tables import load_table  # noqa: E402
-
-_ST8_N_SPLITS = 3
 
 
 @register(
@@ -795,55 +785,30 @@ _ST8_N_SPLITS = 3
     doc="§2.7/A17: foreachBatch incremental rollup — per-batch delta states merged ≡ full recompute",
 )
 def st8_streaming_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
-    tmp = tempfile.mkdtemp(prefix="iotx_st8_")
     # scratch tree released on EVERY exit, including the <2-batch raise
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="iotx_st8_", ignore_cleanup_errors=True
+    ) as tmp:
         in_dir = os.path.join(tmp, "in")
         state_dir = os.path.join(tmp, "state")
-        # split the bounded input into N single-file key slices → N
-        # micro-batches at maxFilesPerTrigger=1 (ts round-trips through the
-        # rewrite unchanged: the stream reader re-normalizes from the actual
-        # footer type). Slicing on a hash of the raw event_id is deterministic
-        # and spreads any real corpus across all N slices.
-        ev = load_table(spark, sf_dir, "events")
-        slice_of = F.pmod(F.xxhash64("event_id"), F.lit(_ST8_N_SPLITS))
-        for i in range(_ST8_N_SPLITS):
-            ev.filter(slice_of == i).coalesce(1).write.mode("append").parquet(in_dir)
+        # ts round-trips through the slice rewrite unchanged: the stream
+        # reader re-normalizes from the actual footer type
+        _write_key_slices(load_table(spark, sf_dir, "events"), "event_id", in_dir)
         stream = sensor_stream(
             spark, in_dir, glob="*.parquet", max_files_per_trigger=1
         )
 
         def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            # delta state only — one tiny row group per (batch, sensor_type).
-            # EPOCH-KEYED DYNAMIC OVERWRITE, not append: foreachBatch is
-            # at-least-once (a crash between sink write and checkpoint commit
-            # replays the epoch), and an appended replay would double-count
-            # that batch's state forever. Overwriting exactly the epoch's own
-            # partition makes the sink replay-idempotent — the exactly-once
-            # recipe SCALE.md states for every foreachBatch sink here.
-            (
-                _partial_state(batch_df)
-                .withColumn("epoch_id", F.lit(epoch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch_id")
-                .parquet(state_dir)
-            )
+            # delta state only — one tiny row group per (batch, sensor_type)
+            _epoch_overwrite(_partial_state(batch_df), epoch_id, state_dir)
 
-        q = (
-            stream.writeStream.foreachBatch(process_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .start()
+        _, n = _run_available_now(
+            stream, process_batch, checkpoint=os.path.join(tmp, "ckpt")
         )
-        q.awaitTermination()
-        data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        if len(data_batches) < 2:  # RuntimeError, not assert: -O strips asserts
+        if n < 2:  # RuntimeError, not assert: -O strips asserts
             raise RuntimeError(
                 f"st8 needs >=2 data micro-batches to certify the cross-batch "
-                f"merge; got {len(data_batches)}"
+                f"merge; got {n}"
             )
 
         merged = merge_states(spark.read.parquet(state_dir).drop("epoch_id"))
@@ -871,11 +836,9 @@ def st8_streaming_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFr
         )
         # |sensor_type| rows — bounded; materialize so the scratch dirs (input
         # slices, state partitions, checkpoint) can be deleted instead of
-        # leaking one mkdtemp per run
+        # leaking one per run
         rows = result.collect()
         return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -939,9 +902,6 @@ WHERE incident_end <= (SELECT max(ts) - INTERVAL {_ST9_WM_MIN} MINUTE
     doc="§2.7/m17: in-flight alert-incident grouping via session windows",
 )
 def st9_streaming_alert_incidents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    name = f"st9_out_{uuid.uuid4().hex[:8]}"
     stream = sensor_stream(spark, sf_dir).filter(F.col("anomaly_score") > 0)
     agg = (
         stream.withWatermark("ts", f"{_ST9_WM_MIN} minutes")
@@ -963,15 +923,8 @@ def st9_streaming_alert_incidents(spark: SparkSession, sf_dir: str) -> DataFrame
             "max_anomaly_score",
         )
     )
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    out, _ = _run_available_now(agg)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -980,14 +933,13 @@ def st9_streaming_alert_incidents(spark: SparkSession, sf_dir: str) -> DataFrame
 # Exact quantiles are not mergeable, so a21 keeps per-group (bin, count)
 # rows as its state; st10 runs that maintenance as a stream: each
 # micro-batch bins its rows against the FIXED calibration domain and
-# epoch-key-overwrites its own (sensor_type, bin) count delta (the same
-# replay-idempotent sink recipe as st8), and the final quantiles
-# finalize from the merged counts alone. The calibration (bin domain)
-# must be shared by every delta — in production it comes from a
-# historical calibration table; here it is one bounded 2-value aggregate
-# over the corpus. Oracle = a21's one-pass recompute: a binning drift,
-# dropped epoch, double-counted replay or cum/total window bug shifts a
-# quantile or a count and fails the hash gate.
+# writes its own (sensor_type, bin) count delta through _epoch_overwrite,
+# and the final quantiles finalize from the merged counts alone. The
+# calibration (bin domain) must be shared by every delta — in production
+# it comes from a historical calibration table; here it is one bounded
+# 2-value aggregate over the corpus. Oracle = a21's one-pass recompute:
+# a binning drift, dropped epoch, double-counted replay or cum/total
+# window bug shifts a quantile or a count and fails the hash gate.
 #
 # The flow crosses a REAL stop/restart boundary (VERDICT r6 demand #5):
 # the first query is kill()ed mid-stream (stop() while unconsumed input
@@ -998,11 +950,11 @@ def st9_streaming_alert_incidents(spark: SparkSession, sf_dir: str) -> DataFrame
 # commit. The restarted query must (a) resume the file-source offsets
 # without re-reading phase-1 files (a re-read double-counts and fails
 # the hash gate), and (b) assign its first batch the torn epoch's id so
-# the dynamic partition overwrite replaces the torn partition wholesale
-# (a leftover torn row shifts a count and fails the gate). The torn
-# write is deterministic where a raw kill is racy: the crash's
-# externally visible artifacts (committed checkpoint prefix + partial
-# uncommitted state) are constructed exactly, so the recovery claim is
+# _epoch_overwrite replaces the torn partition wholesale (a leftover
+# torn row shifts a count and fails the gate). The torn write is
+# deterministic where a raw kill is racy: the crash's externally
+# visible artifacts (committed checkpoint prefix + partial uncommitted
+# state) are constructed exactly, so the recovery claim is
 # proven on every run, not only when the kill happens to land mid-batch.
 # ---------------------------------------------------------------------------
 from ..operators.sketches import _A21_NBINS, _A21_PS, A21_ORACLE  # noqa: E402
@@ -1016,24 +968,21 @@ from ..operators.sketches import _A21_NBINS, _A21_PS, A21_ORACLE  # noqa: E402
 def st10_streaming_histogram_rollup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-
     from pyspark.sql import Window
 
-    tmp = tempfile.mkdtemp(prefix="iotx_st10_")
     # every exit — including the restart-proof RuntimeErrors — must
     # release the scratch tree (a full sliced copy of events)
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="iotx_st10_", ignore_cleanup_errors=True
+    ) as tmp:
         in_dir = os.path.join(tmp, "in")
         state_dir = os.path.join(tmp, "state")
         ckpt_dir = os.path.join(tmp, "ckpt")
         ev = load_table(spark, sf_dir, "events")
-        slice_of = F.pmod(F.xxhash64("event_id"), F.lit(_ST8_N_SPLITS))
         # phase 1 gets slices [0, N-1); the last slice arrives only after the
         # kill, so the restarted query ALWAYS has fresh input to prove the
         # offset recovery on
-        for i in range(_ST8_N_SPLITS - 1):
-            ev.filter(slice_of == i).coalesce(1).write.mode("append").parquet(in_dir)
+        _write_key_slices(ev, "event_id", in_dir, range(_ST8_N_SPLITS - 1))
 
         # the shared bin domain: one 2-value aggregate (bounded by
         # construction); every batch must bin against the SAME domain or the
@@ -1067,36 +1016,14 @@ def st10_streaming_histogram_rollup(
         )
 
         def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            # epoch-keyed dynamic overwrite — replay-idempotent (see st8)
             delta = (
                 batch_df.filter(F.col("value").isNotNull())  # see a21:
                 # NULL bins diverge cross-engine in the cum window
                 .withColumn("bin", bin_)
                 .groupBy("sensor_type", "bin")
                 .agg(F.count("*").alias("cnt"))
-                .withColumn("epoch_id", F.lit(epoch_id))
-                .localCheckpoint()  # one computation: counted AND written
             )
-            if delta.count() == 0:
-                # dynamic overwrite of an EMPTY frame touches no
-                # partitions, so a crashed (torn) write of this epoch
-                # would silently survive a replay that produced zero
-                # post-filter rows (r7 ADVICE: sparse/NULL-heavy
-                # corpora). "Write the empty epoch" explicitly: the
-                # epoch's true content is nothing, so clear its
-                # partition — at real scale this is the partition-prefix
-                # delete an object-store sink issues for the same case.
-                shutil.rmtree(
-                    os.path.join(state_dir, f"epoch_id={int(epoch_id)}"),
-                    ignore_errors=True,
-                )
-                return
-            (
-                delta.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch_id")
-                .parquet(state_dir)
-            )
+            _epoch_overwrite(delta, epoch_id, state_dir)
 
         # ---- phase 1: run continuously, then KILL the query mid-stream ----
         q1 = (
@@ -1137,24 +1064,15 @@ def st10_streaming_histogram_rollup(
         )
 
         # ---- phase 2: deliver the last slice, restart from the checkpoint ----
-        ev.filter(slice_of == _ST8_N_SPLITS - 1).coalesce(1).write.mode(
-            "append"
-        ).parquet(in_dir)
-        q2 = (
-            stream.writeStream.foreachBatch(process_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt_dir)
-            .start()
-        )
-        q2.awaitTermination()
-        n2 = sum(1 for p in q2.recentProgress if p["numInputRows"] > 0)
+        _write_key_slices(ev, "event_id", in_dir, [_ST8_N_SPLITS - 1])
+        _, n2 = _run_available_now(stream, process_batch, checkpoint=ckpt_dir)
         if n2 < 1 or n1 + n2 < 2:
             raise RuntimeError(
                 f"st10 needs data batches on BOTH sides of the restart boundary "
                 f"to certify recovery; got {n1} before / {n2} after"
             )
         # the restarted batch must have replaced the torn partition wholesale —
-        # a surviving sentinel means dynamic overwrite failed (the hash gate
+        # a surviving sentinel means _epoch_overwrite failed (the hash gate
         # would also fail, via the extra sensor_type group; this check names
         # the cause)
         torn_left = (
@@ -1204,11 +1122,9 @@ def st10_streaming_histogram_rollup(
             ],
         )
         # |sensor_type| rows — bounded; materialize so the scratch dirs can
-        # be deleted instead of leaking one mkdtemp per run
+        # be deleted instead of leaking one per run
         rows = result.collect()
         return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1216,9 +1132,7 @@ def st10_streaming_histogram_rollup(
 # closing the mergeable-state triangle: exact aggregates st8, quantile
 # histograms st10, frequency sketches st11). Each micro-batch reduces to
 # its own bounded CMS delta — ≤ depth·width (depth, bucket, cnt) rows no
-# matter the batch size — written with the epoch-keyed dynamic-overwrite
-# recipe every foreachBatch sink here uses (at-least-once replay
-# re-OVERWRITES the epoch's own partition: idempotent). The serving-side
+# matter the batch size — written through _epoch_overwrite. The serving-side
 # sketch is the counter-wise SUM across epochs; CMS is linear, so
 # merged-from-deltas must equal the one-pass sketch EXACTLY — that
 # equality is the hashed merge_consistent certificate, and the top-k
@@ -1252,16 +1166,15 @@ from ..operators.sketches import _A22_ORACLE  # noqa: E402  (no cycle:
 def st11_streaming_cms_maintenance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-
     from ..operators.sketches import (
         cms_heavy_hitter_report,
         cms_merge_consistent,
         cms_table,
     )
 
-    tmp = tempfile.mkdtemp(prefix="iotx_st11_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="iotx_st11_", ignore_cleanup_errors=True
+    ) as tmp:
         in_dir = os.path.join(tmp, "in")
         state_dir = os.path.join(tmp, "state")
         ev = load_table(spark, sf_dir, "events")
@@ -1277,47 +1190,18 @@ def st11_streaming_cms_maintenance(
                 "user_id long, true_count long, cms_estimate long, "
                 "overestimate long, merge_consistent boolean",
             )
-        slice_of = F.pmod(F.xxhash64("event_id"), F.lit(_ST8_N_SPLITS))
-        for i in range(_ST8_N_SPLITS):
-            ev.filter(slice_of == i).coalesce(1).write.mode("append").parquet(
-                in_dir
-            )
+        _write_key_slices(ev, "event_id", in_dir)
         stream = events_file_stream(
             spark, in_dir, glob="*.parquet", max_files_per_trigger=1
         )
 
         def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            delta = (
-                cms_table(batch_df.filter(F.col("user_id").isNotNull()))
-                .withColumn("epoch_id", F.lit(epoch_id))
-                .localCheckpoint()  # one computation: emptiness-checked
-                # AND written (st10's fix — isEmpty would otherwise run
-                # the batch aggregation once and the write a second time)
-            )
-            if delta.isEmpty():
-                # "write the empty epoch" explicitly — same sparse-batch
-                # hardening as st10: an empty dynamic overwrite touches
-                # no partitions, so clear the epoch's dir instead
-                shutil.rmtree(
-                    os.path.join(state_dir, f"epoch_id={int(epoch_id)}"),
-                    ignore_errors=True,
-                )
-                return
-            (
-                delta.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch_id")
-                .parquet(state_dir)
-            )
+            delta = cms_table(batch_df.filter(F.col("user_id").isNotNull()))
+            _epoch_overwrite(delta, epoch_id, state_dir)
 
-        q = (
-            stream.writeStream.foreachBatch(process_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .start()
+        _, n = _run_available_now(
+            stream, process_batch, checkpoint=os.path.join(tmp, "ckpt")
         )
-        q.awaitTermination()
-        data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
         # >=2 data batches certify the cross-epoch sketch merge across
         # epochs; exactly 1 (possible on a tiny or hash-skewed corpus
         # where every row lands in one xxhash64 slice) still certifies
@@ -1325,10 +1209,10 @@ def st11_streaming_cms_maintenance(
         # so fall back instead of raising (r8 advice). 0 is unreachable
         # here (the non-empty guard above ensures at least one slice has
         # rows), so it stays a loud invariant failure.
-        if len(data_batches) < 1:  # RuntimeError, not assert (-O strips)
+        if n < 1:  # RuntimeError, not assert (-O strips)
             raise RuntimeError(
                 f"st11 saw a non-empty input yet no data micro-batch "
-                f"arrived; got {len(data_batches)}"
+                f"arrived; got {n}"
             )
 
         merged = (
@@ -1340,11 +1224,9 @@ def st11_streaming_cms_maintenance(
         consistent = cms_merge_consistent(cms_table(evb), merged)
         result = cms_heavy_hitter_report(evb, merged, consistent)
         # ≤ _CMS_TOPK rows — bounded; materialize so the scratch dirs can
-        # be deleted instead of leaking one mkdtemp per run
+        # be deleted instead of leaking one per run
         rows = result.collect()
         return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 
@@ -1355,9 +1237,7 @@ def st11_streaming_cms_maintenance(
 # each batch reconciles against the STATIC dimension (the st4
 # stream-static shape: per-key decisions need no cross-batch state
 # because a full snapshot carries each key exactly once) and writes its
-# history fragment with the epoch-keyed dynamic-overwrite recipe every
-# foreachBatch sink here uses — at-least-once replay re-overwrites the
-# epoch's own partition, so the fragment store is replay-idempotent.
+# history fragment through _epoch_overwrite.
 # Full-snapshot retire semantics are inherently end-of-snapshot facts
 # ("key X never arrived"), so the retired pass runs once at snapshot
 # close: dim ANTI-JOIN the keys seen across all epochs. The assembled
@@ -1401,8 +1281,6 @@ _ST12_SCHEMA = (
 def st12_streaming_scd2_maintenance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-
     cols = [
         "c_custkey", "acctbal", "valid_from", "valid_to", "is_current",
         "scd_action",
@@ -1420,107 +1298,77 @@ def st12_streaming_scd2_maintenance(
             m.select("c_custkey", "in_dim", "in_snap", "bal_old", "bal_new")
         )
 
-    tmp = tempfile.mkdtemp(prefix="iotx_st12_")
+    # the dim is consumed once per micro-batch plus the retired pass —
+    # persist so the customer parquet is scanned once, not N+1 times
+    dim = dim.persist()
     try:
-        in_dir = os.path.join(tmp, "in")
-        state_dir = os.path.join(tmp, "state")
-        # the dim is consumed once per micro-batch plus the retired pass —
-        # persist so the customer parquet is scanned once, not N+1 times
-        dim = dim.persist()
-        slice_of = F.pmod(F.xxhash64("c_custkey"), F.lit(_ST8_N_SPLITS))
-        for i in range(_ST8_N_SPLITS):
-            (
-                snap.filter(slice_of == i)
-                .select("c_custkey", "bal_new")
-                .coalesce(1)
-                .write.mode("append")
+        with tempfile.TemporaryDirectory(
+            prefix="iotx_st12_", ignore_cleanup_errors=True
+        ) as tmp:
+            in_dir = os.path.join(tmp, "in")
+            state_dir = os.path.join(tmp, "state")
+            _write_key_slices(
+                snap.select("c_custkey", "bal_new"), "c_custkey", in_dir
+            )
+            stream = (
+                spark.readStream.schema("c_custkey long, bal_new double")
+                .option("maxFilesPerTrigger", 1)
                 .parquet(in_dir)
             )
-        stream = (
-            spark.readStream.schema("c_custkey long, bal_new double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
 
-        def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            mb = (
-                batch_df.withColumn("in_snap", F.lit(True))
-                .join(dim, "c_custkey", "left")
-                .select(
-                    "c_custkey",
-                    F.coalesce("in_dim", F.lit(False)).alias("in_dim"),
-                    "in_snap",
-                    "bal_old",
-                    "bal_new",
+            def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
+                mb = (
+                    batch_df.withColumn("in_snap", F.lit(True))
+                    .join(dim, "c_custkey", "left")
+                    .select(
+                        "c_custkey",
+                        F.coalesce("in_dim", F.lit(False)).alias("in_dim"),
+                        "in_snap",
+                        "bal_old",
+                        "bal_new",
+                    )
+                )
+                _epoch_overwrite(scd2_history_rows(mb), epoch_id, state_dir)
+
+            _, n = _run_available_now(
+                stream, process_batch, checkpoint=os.path.join(tmp, "ckpt")
+            )
+            # >=2 data batches certify the cross-epoch history assembly
+            # across epochs; exactly 1 (possible on a tiny or hash-skewed
+            # corpus where every row lands in one xxhash64 slice) still
+            # certifies the degenerate case — merge of one delta must
+            # equal one-pass — so fall back instead of raising (r8
+            # advice). 0 is unreachable here (the non-empty guard above
+            # ensures at least one slice has rows), so it stays a loud
+            # invariant failure.
+            if n < 1:  # RuntimeError, not assert (-O strips)
+                raise RuntimeError(
+                    f"st12 saw a non-empty input yet no data micro-batch "
+                    f"arrived; got {n}"
+                )
+
+            frags = spark.read.parquet(state_dir).select(*cols)
+            # full-snapshot retire semantics: keys the stream NEVER
+            # delivered. Fragment keys only — the anti-join probe is
+            # |snapshot keys|, not history rows
+            seen = frags.select("c_custkey").distinct()
+            retired_m = (
+                dim.join(seen, "c_custkey", "left_anti")
+                .withColumn("in_snap", F.lit(False))
+                .withColumn("bal_new", F.lit(None).cast("double"))
+            )
+            retired = scd2_history_rows(
+                retired_m.select(
+                    "c_custkey", "in_dim", "in_snap", "bal_old", "bal_new"
                 )
             )
-            frag = (
-                scd2_history_rows(mb)
-                .withColumn("epoch_id", F.lit(int(epoch_id)))
-                .localCheckpoint()  # one computation: emptiness-checked
-                # AND written (st10's fix)
-            )
-            if frag.isEmpty():
-                # write-the-empty-epoch hardening (st10/st11): an empty
-                # dynamic overwrite touches no partitions, so clear the
-                # epoch's dir instead — replay of an emptied epoch stays
-                # idempotent
-                shutil.rmtree(
-                    os.path.join(state_dir, f"epoch_id={int(epoch_id)}"),
-                    ignore_errors=True,
-                )
-                return
-            (
-                frag.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch_id")
-                .parquet(state_dir)
-            )
-
-        q = (
-            stream.writeStream.foreachBatch(process_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .start()
-        )
-        q.awaitTermination()
-        data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        # >=2 data batches certify the cross-epoch history assembly across
-        # epochs; exactly 1 (possible on a tiny or hash-skewed corpus
-        # where every row lands in one xxhash64 slice) still certifies
-        # the degenerate case — merge of one delta must equal one-pass —
-        # so fall back instead of raising (r8 advice). 0 is unreachable
-        # here (the non-empty guard above ensures at least one slice has
-        # rows), so it stays a loud invariant failure.
-        if len(data_batches) < 1:  # RuntimeError, not assert (-O strips)
-            raise RuntimeError(
-                f"st12 saw a non-empty input yet no data micro-batch "
-                f"arrived; got {len(data_batches)}"
-            )
-
-        frags = spark.read.parquet(state_dir).select(*cols)
-        # full-snapshot retire semantics: keys the stream NEVER delivered.
-        # Fragment keys only — the anti-join probe is |snapshot keys|, not
-        # history rows
-        seen = frags.select("c_custkey").distinct()
-        retired_m = (
-            dim.join(seen, "c_custkey", "left_anti")
-            .withColumn("in_snap", F.lit(False))
-            .withColumn("bal_new", F.lit(None).cast("double"))
-        )
-        retired = scd2_history_rows(
-            retired_m.select(
-                "c_custkey", "in_dim", "in_snap", "bal_old", "bal_new"
-            )
-        )
-        result = frags.unionByName(retired)
-        # ~1.1x |customers| rows at gate SFs — materialize so the scratch
-        # dirs can be deleted instead of leaking one mkdtemp per run
-        rows = result.collect()
-        return spark.createDataFrame(rows, result.schema)
+            result = frags.unionByName(retired)
+            # ~1.1x |customers| rows at gate SFs — materialize so the
+            # scratch dirs can be deleted instead of leaking one per run
+            rows = result.collect()
+            return spark.createDataFrame(rows, result.schema)
     finally:
         dim.unpersist()
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1531,10 +1379,9 @@ def st12_streaming_scd2_maintenance(
 # in micro-batches; each batch joins the STATIC dimension (orders —
 # the st4 stream-static shape) and reduces to its own partial state:
 # O(|groups-in-batch|) (ship_month, priority, n, DECIMAL rev) rows
-# written with the epoch-keyed dynamic-overwrite replay-idempotence
-# recipe. The serving view is the groupBy-sum across epochs — exact,
-# because the revenue partials are decimal and addition is
-# order-independent. Registers with a23's oracle VERBATIM (the full
+# written through _epoch_overwrite. The serving view is the groupBy-sum
+# across epochs — exact, because the revenue partials are decimal and
+# addition is order-independent. Registers with a23's oracle VERBATIM (the full
 # join recompute), so the external gate value-checks the streamed
 # maintenance end-to-end.
 #
@@ -1557,13 +1404,12 @@ from ..operators.joins import _disc_price as _j_disc_price  # noqa: E402
     ),
 )
 def st13_streaming_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from ..caching import track
     from ..functions.rounding import fround
 
-    tmp = tempfile.mkdtemp(prefix="iotx_st13_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="iotx_st13_", ignore_cleanup_errors=True
+    ) as tmp:
         in_dir = os.path.join(tmp, "in")
         state_dir = os.path.join(tmp, "state")
         o = track(
@@ -1580,11 +1426,7 @@ def st13_streaming_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "ship_month timestamp, o_orderpriority string, "
                 "n_items bigint, revenue double",
             )
-        slice_of = F.pmod(F.xxhash64("l_orderkey"), F.lit(_ST8_N_SPLITS))
-        for i in range(_ST8_N_SPLITS):
-            l.filter(slice_of == i).coalesce(1).write.mode("append").parquet(
-                in_dir
-            )
+        _write_key_slices(l, "l_orderkey", in_dir)
         stream = (
             spark.readStream.schema(
                 "l_orderkey long, l_shipdate timestamp, "
@@ -1605,32 +1447,12 @@ def st13_streaming_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.count("*").alias("n"),
                     F.sum(_j_disc_price()).alias("rev"),  # DECIMAL partial
                 )
-                .withColumn("epoch_id", F.lit(int(epoch_id)))
-                .localCheckpoint()  # one computation: emptiness-checked
-                # AND written (st10's fix)
             )
-            if state.isEmpty():
-                # write-the-empty-epoch hardening (st10/st11/st12)
-                shutil.rmtree(
-                    os.path.join(state_dir, f"epoch_id={int(epoch_id)}"),
-                    ignore_errors=True,
-                )
-                return
-            (
-                state.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch_id")
-                .parquet(state_dir)
-            )
+            _epoch_overwrite(state, epoch_id, state_dir)
 
-        q = (
-            stream.writeStream.foreachBatch(process_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .start()
+        _, n = _run_available_now(
+            stream, process_batch, checkpoint=os.path.join(tmp, "ckpt")
         )
-        q.awaitTermination()
-        data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
         # >=2 data batches certify the cross-epoch state merge across
         # epochs; exactly 1 (possible on a tiny or hash-skewed corpus
         # where every row lands in one xxhash64 slice) still certifies
@@ -1638,10 +1460,10 @@ def st13_streaming_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         # so fall back instead of raising (r8 advice). 0 is unreachable
         # here (the non-empty guard above ensures at least one slice has
         # rows), so it stays a loud invariant failure.
-        if len(data_batches) < 1:  # RuntimeError, not assert (-O strips)
+        if n < 1:  # RuntimeError, not assert (-O strips)
             raise RuntimeError(
                 f"st13 saw a non-empty input yet no data micro-batch "
-                f"arrived; got {len(data_batches)}"
+                f"arrived; got {n}"
             )
 
         merged = (
@@ -1659,11 +1481,9 @@ def st13_streaming_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             fround(F.col("rev").cast("double"), 2).alias("revenue"),
         )
         # |months|x|priorities| rows — bounded; materialize so the
-        # scratch dirs can be deleted instead of leaking one mkdtemp
+        # scratch dirs can be deleted instead of leaking one per run
         rows = result.collect()
         return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1677,14 +1497,14 @@ def st13_streaming_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 # card assembles from merged state via the SAME card_assemble the batch
 # operator uses, so state ⊕ delta ≡ one-pass holds by construction and
 # the external gate value-checks it against dp16's oracle VERBATIM.
+# Every fragment is written through _epoch_overwrite.
 #
 # Scale: counter and lang fragments are |sources|- / |sources×langs|-
 # sized per epoch; the text-key fragment is the irreducible state of an
 # EXACT distinct count (|distinct texts| keys — production would keep
 # it as a bucketed table; an approximate card would swap in a17's HLL
-# sketch state and shrink it to |sources|×sketch). Epoch-keyed dynamic
-# overwrite keeps every fragment write replay-idempotent, and a17c's
-# compaction contract bounds the epoch count.
+# sketch state and shrink it to |sources|×sketch). a17c's compaction
+# contract bounds the epoch count.
 # ---------------------------------------------------------------------------
 from ..operators.textstats import (  # noqa: E402  (no cycle: textstats
     # never imports streaming)
@@ -1716,10 +1536,9 @@ _ST14_EMPTY_SCHEMA = (
 def st14_streaming_dataset_card(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-
-    tmp = tempfile.mkdtemp(prefix="iotx_st14_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="iotx_st14_", ignore_cleanup_errors=True
+    ) as tmp:
         in_dir = os.path.join(tmp, "in")
         cnt_dir = os.path.join(tmp, "state_counters")
         txt_dir = os.path.join(tmp, "state_textkeys")
@@ -1729,11 +1548,7 @@ def st14_streaming_dataset_card(
         )
         if docs.isEmpty():
             return spark.createDataFrame([], _ST14_EMPTY_SCHEMA)
-        slice_of = F.pmod(F.xxhash64("doc_id"), F.lit(_ST8_N_SPLITS))
-        for i in range(_ST8_N_SPLITS):
-            docs.filter(slice_of == i).coalesce(1).write.mode(
-                "append"
-            ).parquet(in_dir)
+        _write_key_slices(docs, "doc_id", in_dir)
         stream = (
             spark.readStream.schema(
                 "source string, lang string, text string, doc_id long"
@@ -1742,82 +1557,46 @@ def st14_streaming_dataset_card(
             .parquet(in_dir)
         )
 
-        # counted inside the batch callback, NOT via q.recentProgress:
-        # that is a ring buffer capped by numRecentProgressUpdates
-        # (default 100) — fine at 3 splits, silently miscounts if the
-        # split count is ever raised past the cap (r9 ADVICE)
-        data_batches = 0
-
         def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            nonlocal data_batches
-            d = card_project(batch_df).localCheckpoint()  # one
-            # computation feeding the emptiness check + three fragments
-            if d.isEmpty():
-                # write-the-empty-epoch hardening (st10-st13)
-                for sd in (cnt_dir, txt_dir, lng_dir):
-                    shutil.rmtree(
-                        os.path.join(sd, f"epoch_id={int(epoch_id)}"),
-                        ignore_errors=True,
-                    )
-                return
-            data_batches += 1
-            for sd, frag in (
-                (cnt_dir, card_counters(d)),
-                (txt_dir, card_text_keys(d)),
-                (lng_dir, card_lang_counts(d)),
-            ):
-                (
-                    frag.withColumn("epoch_id", F.lit(int(epoch_id)))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("epoch_id")
-                    .parquet(sd)
-                )
+            # one computation of the UDF projection feeds three fragments
+            d = card_project(batch_df).localCheckpoint()
+            _epoch_overwrite(card_counters(d), epoch_id, cnt_dir)
+            _epoch_overwrite(card_text_keys(d), epoch_id, txt_dir)
+            _epoch_overwrite(card_lang_counts(d), epoch_id, lng_dir)
 
-        q = (
-            stream.writeStream.foreachBatch(process_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .start()
+        _, n = _run_available_now(
+            stream, process_batch, checkpoint=os.path.join(tmp, "ckpt")
         )
-        q.awaitTermination()
         # ≥2 data batches certify the cross-epoch merge; exactly 1 still
         # certifies the degenerate one-delta case (st11-st13's fallback,
         # r8 advice); 0 on a non-empty input is a loud invariant failure
-        if data_batches < 1:  # RuntimeError, not assert (-O strips)
+        if n < 1:  # RuntimeError, not assert (-O strips)
             raise RuntimeError(
                 f"st14 saw a non-empty input yet no data micro-batch "
-                f"arrived; got {data_batches}"
+                f"arrived; got {n}"
             )
 
-        # txt_dir needs special handling the other two state dirs don't:
+        # txt_dir needs a pinned schema the other two state dirs don't:
         # a batch whose rows ALL carry NULL text writes an EMPTY text-key
-        # fragment (zero part files), and an all-NULL corpus leaves the
-        # dir absent or data-less — schema inference would raise
+        # fragment (zero part files), so an all-NULL corpus leaves the
+        # dir data-less and schema inference would raise
         # UNABLE_TO_INFER_SCHEMA where dp16 returns an empty card (r9
-        # self-review). Explicit schema + existence guard restore the
-        # batch twin's semantics; cnt/lng fragments are non-empty
-        # whenever a batch has rows, so only counters' guard matters for
-        # the pathological zero-fragment case.
-        if os.path.isdir(txt_dir):
-            text_keys = (
-                spark.read.schema("source string, text string, epoch_id int")
-                .parquet(txt_dir)
-                .drop("epoch_id")
-            )
-        else:
-            text_keys = spark.createDataFrame([], "source string, text string")
+        # self-review); cnt/lng fragments are non-empty whenever a batch
+        # has rows. The dir itself exists: every batch writes all three.
+        text_keys = (
+            spark.read.schema("source string, text string, epoch_id int")
+            .parquet(txt_dir)
+            .drop("epoch_id")
+        )
         result = card_assemble(
             spark.read.parquet(cnt_dir).drop("epoch_id"),
             text_keys,
             spark.read.parquet(lng_dir).drop("epoch_id"),
         )
         # |sources| rows — bounded; materialize so the scratch dirs can
-        # be deleted instead of leaking one mkdtemp per run
+        # be deleted instead of leaking one per run
         rows = result.collect()
         return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1886,16 +1665,15 @@ FROM s GROUP BY user_id, session_id
 def st15_stateful_session_eviction(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-    import uuid
     from datetime import timedelta
 
     from .sessions import GAP_MIN, sessionize_with_eviction
 
     if GAP_MIN != _ST15_GAP_MIN:  # RuntimeError, not assert: -O strips
         raise RuntimeError("st15 oracle gap diverged from sessions.GAP_MIN")
-    tmp = tempfile.mkdtemp(prefix="iotx_st15_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="iotx_st15_", ignore_cleanup_errors=True
+    ) as tmp:
         in_dir = os.path.join(tmp, "in")
         os.makedirs(in_dir)
         ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
@@ -1940,25 +1718,15 @@ def st15_stateful_session_eviction(
             .parquet(in_dir)
             .withWatermark("ts", "1 second")
         )
-        name = f"st15_out_{uuid.uuid4().hex[:8]}"
-        q = (
-            sessionize_with_eviction(stream)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        out, n = _run_available_now(
+            sessionize_with_eviction(stream), checkpoint=os.path.join(tmp, "ckpt")
         )
-        q.awaitTermination()
-        data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        if len(data_batches) < 4:
+        if n < 4:
             raise RuntimeError(
                 f"st15 needs >= 4 data micro-batches (2 slices + 2 "
                 f"sentinels) to certify cross-batch state carry and "
-                f"watermark-driven eviction; got {len(data_batches)}"
+                f"watermark-driven eviction; got {n}"
             )
-        out = spark.table(name)
         real = F.col("user_id") >= 0
         n_users = ev.select("user_id").distinct().count()
         n_evicted = out.filter(real & F.col("via_timeout")).count()
@@ -1980,5 +1748,3 @@ def st15_stateful_session_eviction(
         return out.filter(real).select(
             "user_id", "session_id", "session_start", "session_end", "n_events"
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)

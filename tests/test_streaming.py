@@ -330,51 +330,80 @@ def test_st7_is_a_true_stream_stream_join(spark):
     assert "EventTimeWatermark" in plan, plan
 
 
-def test_st8_state_sink_is_replay_idempotent(spark):
-    """foreachBatch is at-least-once: re-delivering an epoch must leave
-    the state store unchanged (epoch-keyed dynamic overwrite), where an
-    append sink would double-count the replayed delta."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
+def test_st8_state_sink_is_replay_idempotent(spark, tmp_path):
+    """foreachBatch is at-least-once: re-delivering an epoch through the
+    package's epoch-keyed sink must leave the state store unchanged, where
+    an append sink would double-count the replayed delta; a replay that
+    yields zero rows must leave the epoch empty."""
     from iot_big_data_engineering_spark.operators.sketches import (
         _partial_state,
     )
-    from iot_big_data_engineering_spark.sources.sensor_view import (
-        quality_checked,
+    from iot_big_data_engineering_spark.streaming.pipeline import (
+        _epoch_overwrite,
     )
 
-    from .conftest import SF_SMOKE
+    state_dir = str(tmp_path / "state")
+    batch = _partial_state(quality_checked(spark, SF_SMOKE).limit(500))
 
-    state_dir = tempfile.mkdtemp(prefix="iotx_st8_replay_") + "/state"
-    batch = quality_checked(spark, SF_SMOKE).limit(500)
-
-    def write_epoch(df, epoch_id):
-        (
-            _partial_state(df)
-            .withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(state_dir)
+    def state():
+        return sorted(
+            (r.epoch_id, r.sensor_type, r.n)
+            for r in spark.read.parquet(state_dir).collect()
         )
 
-    write_epoch(batch, 0)
-    once = sorted(
-        (r.sensor_type, r.n) for r in spark.read.parquet(state_dir).collect()
-    )
-    write_epoch(batch, 0)  # replayed epoch
-    twice = sorted(
-        (r.sensor_type, r.n) for r in spark.read.parquet(state_dir).collect()
-    )
-    assert once == twice
+    _epoch_overwrite(batch, 0, state_dir)
+    once = state()
+    _epoch_overwrite(batch, 0, state_dir)  # replayed epoch
+    assert state() == once
     # a genuinely NEW epoch still lands alongside
-    write_epoch(batch, 1)
-    n_epochs = (
-        spark.read.parquet(state_dir).select("epoch_id").distinct().count()
+    _epoch_overwrite(batch, 1, state_dir)
+    assert {e for e, _, _ in state()} == {0, 1}
+    # an empty replay of epoch 1 clears it and leaves epoch 0 as it was
+    _epoch_overwrite(batch.limit(0), 1, state_dir)
+    assert state() == once
+
+
+def test_microbatch_pipeline_replays_uncommitted_epoch(
+    spark, split_events_dir, tmp_path
+):
+    """A crash between the sink writes and the checkpoint commit: the
+    last batch's commit is deleted and a sentinel row is planted under
+    its epoch in every sink. The restarted pipeline must replay that
+    epoch so all three sinks equal a clean run's, with no sentinel left."""
+    kw = dict(glob="part-*.parquet", max_files_per_trigger=1)
+    clean = run_microbatch_pipeline(
+        spark, split_events_dir, str(tmp_path / "clean"), **kw
     )
-    assert n_epochs == 2
+    out = str(tmp_path / "crashed")
+    paths = run_microbatch_pipeline(spark, split_events_dir, out, **kw)
+
+    commits = os.path.join(out, "_checkpoint", "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    assert last >= 1
+    for f in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, f)):
+            os.remove(os.path.join(commits, f))
+    for path in paths.values():
+        sink = spark.read.parquet(path)
+        row = sink.drop("epoch_id").limit(1).collect()
+        (
+            spark.createDataFrame(row, sink.drop("epoch_id").schema)
+            .withColumn("sensor_type", F.lit("__torn__"))
+            .withColumn("epoch_id", F.lit(last))
+            .write.mode("append")
+            .partitionBy("epoch_id")
+            .parquet(path)
+        )
+        assert spark.read.parquet(path).filter(
+            F.col("sensor_type") == "__torn__"
+        ).count() == 1
+
+    run_microbatch_pipeline(spark, split_events_dir, out, **kw)
+    for key, path in paths.items():
+        got, want = spark.read.parquet(path), spark.read.parquet(clean[key])
+        assert got.filter(F.col("sensor_type") == "__torn__").count() == 0, key
+        assert got.exceptAll(want).count() == 0, key
+        assert want.exceptAll(got).count() == 0, key
 
 
 def test_st10_sparse_restart_batches_tolerated(spark, tmp_path):

@@ -48,6 +48,30 @@ def test_overwrite_dated_is_idempotent_per_date(spark):
     assert spark.table("t_daily").count() == n
 
 
+@pytest.mark.parametrize("prior", [None, "static"])
+def test_overwrite_dated_restores_overwrite_mode(spark, prior):
+    """The dynamic overwrite mode is scoped to the call: the session-wide
+    conf (shared by every later test in this session) is left as found,
+    unset or set."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    saved = spark.conf.get(key, None)
+    if prior is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, prior)
+    try:
+        _drop_with_location(spark, "t_daily_conf")
+        daily = a2_daily_analytics(spark, SF_SMOKE)
+        overwrite_dated_table(daily, "t_daily_conf")  # create path
+        overwrite_dated_table(daily, "t_daily_conf")  # insertInto path
+        assert spark.conf.get(key, None) == prior
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
+
+
 def test_overwrite_table(spark):
     _drop_with_location(spark, "t_report")
     df = quality_checked(spark, SF_SMOKE).groupBy("sensor_type").count()
